@@ -1,11 +1,21 @@
 package graft
 
-/** Dev-only plan-audit dump: executes a set of headline queries at the
-  * given SF and writes PLANS.md — each query's final (post-AQE) physical
-  * plan tree plus a note on what the plan is supposed to prove. The
-  * committed artifact is the written record of the "explain, then
-  * iterate until it's the plan you'd want" loop each operator went
-  * through. Usage: runMain graft.Plans [sfDir] [outFile] */
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
+
+/** The plan dumper. It executes a query and records every plan the run
+  * executes: each action run while the query is built (a scratch
+  * localCheckpoint, a count, a collect), then the returned DataFrame's
+  * final (post-AQE) plan. Two forms:
+  *   runMain graft.Plans [sfDir] [outFile]
+  *     the audit: the headline queries below, each with a note on what
+  *     its plans must show, written to PLANS.md;
+  *   runMain graft.Plans <sfDir> <outDir> <suffix> <q1,q2,...>
+  *     `explain("formatted")` of every plan of each named query, one
+  *     `<outDir>/<q>_<suffix>.txt` per query (before/after evidence). */
 object Plans {
 
   /** `details`: substrings selecting node-detail lines (the part of
@@ -476,11 +486,13 @@ object Plans {
         "- AQE sizes reducers by INPUT bytes and would serialize the " +
         "expansion onto one task (the q120/q185 explosive-join lesson). " +
         "Upstream, the co-interaction cell cap (<= 64 actives) is a " +
-        "count window over (et, hb), so the capped frame reuses the " +
-        "pair join's own partitioning; cells past the cap carry no " +
-        "pair signal and would cost quadratically (the q97 posting-df " +
-        "doctrine). Repeated subframes (pe, pnt) are served by " +
-        "ReusedExchange, not checkpoint barriers - measured 9.9 s " +
+        "size filter on each (et, hb) cell's collected user set, so " +
+        "ONE (et, hb) exchange feeds the streaming pair generator; " +
+        "cells past the cap carry no pair signal and would cost " +
+        "quadratically (the q97 posting-df doctrine). The edge frame " +
+        "pe is a lazy localCheckpoint (its plan is the first section); " +
+        "the repeated pnt subframe is served by ReusedExchange, not a " +
+        "checkpoint barrier - measured 9.9 s " +
         "checkpointed vs 5.8 s reused at sf0.1 (1.39M triangles); 10x " +
         "and 100x run 3.2/4.1 s flat (their denser cells cross the cap " +
         "- at that density hour-cells are boilerplate, not signal).",
@@ -821,52 +833,99 @@ object Plans {
         "silently degrades candidate pruning now fails the " +
         "differential instead of hiding in a header comment."))
 
+  /** Run query `name` and return (label, `explain("formatted")`) for
+    * every plan it executed, in order. Dataset actions, localCheckpoint
+    * included, go through `withAction`, so one QueryExecutionListener
+    * sees the build phase as it really runs; the returned DataFrame is
+    * then executed in full (`Sessions.runFully`, which is not an action)
+    * and its final plan appended as "final". Releases the run's scratch. */
+  private[graft] def capture(spark: SparkSession, name: String,
+      sfDir: String): Seq[(String, String)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = seen.add(funcName -> qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    bridge.drainListenerBus(spark) // no earlier run's events
+    spark.listenerManager.register(listener)
+    try {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      Sessions.runFully(df) // execute so AQE settles on the final plan
+      bridge.drainListenerBus(spark)
+      (seen.asScala.toSeq :+ ("final" -> df.queryExecution)).map {
+        case (label, qe) => label -> qe.explainString(FormattedMode)
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      Sessions.releaseAll(spark)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val out = if (args.length > 1) args(1) else "PLANS.md"
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    // lazyScratch keeps scratch-cached builders unmaterialized so the
-    // dumped plan shows the real operator tree, not a checkpoint scan
-    sys.props("graft.lazyScratch") = "1"
+    try {
+      if (args.length >= 4) dumpEach(spark, sfDir, args(1), args(2), args(3))
+      else audit(spark, sfDir, if (args.length > 1) args(1) else "PLANS.md")
+    } finally spark.stop()
+  }
+
+  private def dumpEach(spark: SparkSession, sfDir: String, outDir: String,
+      suffix: String, names: String): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    names.split(",").foreach { qn =>
+      try {
+        val plans = capture(spark, qn, sfDir)
+        val txt = plans.zipWithIndex.map { case ((label, plan), i) =>
+          s"=== ${i + 1}/${plans.size} $label ===\n$plan"
+        }.mkString("\n")
+        val out = java.nio.file.Paths.get(outDir, s"${qn}_$suffix.txt")
+        java.nio.file.Files.writeString(out, txt)
+        println(s"PLANS $qn -> $out")
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          println(s"PLANS $qn: FAIL (${e.getMessage})")
+      }
+    }
+  }
+
+  private def audit(spark: SparkSession, sfDir: String, out: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit of headline queries\n\n")
     sb.append(s"Generated by `sbt 'runMain graft.Plans'` at `$sfDir`. ")
-    sb.append("Each section: what the plan must show to be the RIGHT " +
-      "plan at 100 TB, then the final (post-AQE) plan tree as executed " +
-      "at the audit SF. Node details (ReadSchema/PushedFilters) are in " +
-      "`explain(\"formatted\")`, trimmed here to the tree.\n\n")
-    try {
-      entries.foreach { e =>
-        // getOption-style save: a conf key with no default must be
-        // UNSET on restore, not read eagerly (which would throw before
-        // the query even runs)
-        val saved = e.confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-        e.confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        try {
-        val df = SparkEntry.queries(e.name)(spark, sfDir)
-        Sessions.runFully(df) // execute so AQE settles on the final plan
-        val formatted = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        val tree = formatted.split("\n\n")(0)
-        sb.append(s"## ${e.name}\n\n${e.note}\n\n```\n$tree\n```\n\n")
-        if (e.details.nonEmpty) {
-          val picked = formatted.linesIterator
-            .filter(l => e.details.exists(l.contains)).distinct.toSeq
-          if (picked.nonEmpty)
-            sb.append(s"Selected node details:\n\n```\n" +
-              picked.mkString("\n") + "\n```\n\n")
-        }
-        } finally {
-          saved.foreach {
-            case (k, Some(v)) => spark.conf.set(k, v)
-            case (k, None)    => spark.conf.unset(k)
-          }
-          Sessions.releaseAll(spark) // even when the entry fails
-        }
+    sb.append("Each section: what the plans must show to be the RIGHT " +
+      "plans at 100 TB, then every plan tree the query executed at the " +
+      "audit SF, in order: one per action run while the query was " +
+      "built (a scratch `localCheckpoint`, a `count`, a `collect`), " +
+      "then the final (post-AQE) plan of the returned DataFrame. Node details " +
+      "(ReadSchema/PushedFilters) are in `explain(\"formatted\")`, " +
+      "trimmed here to the tree.\n\n")
+    entries.foreach { e =>
+      // getOption-style save: a conf key with no default must be
+      // UNSET on restore, not read eagerly (which would throw before
+      // the query even runs)
+      val saved = e.confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      e.confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val plans = try capture(spark, e.name, sfDir) finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
       }
-    } finally sys.props.remove("graft.lazyScratch")
+      sb.append(s"## ${e.name}\n\n${e.note}\n\n")
+      plans.zipWithIndex.foreach { case ((label, plan), i) =>
+        val tree = plan.split("\n\n")(0)
+        sb.append(s"### ${i + 1}/${plans.size} `$label`\n\n```\n$tree\n```\n\n")
+      }
+      if (e.details.nonEmpty) {
+        val picked = plans.flatMap(_._2.linesIterator)
+          .filter(l => e.details.exists(l.contains)).distinct
+        if (picked.nonEmpty)
+          sb.append(s"Selected node details:\n\n```\n" +
+            picked.mkString("\n") + "\n```\n\n")
+      }
+    }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
-    println(s"wrote $out (${entries.size} plans)")
-    spark.stop()
+    println(s"wrote $out (${entries.size} queries)")
   }
 }

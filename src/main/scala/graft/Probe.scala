@@ -1,214 +1,125 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.bridge
 
-/** Dev-only scratch main: time one named query and dump its formatted
-  * plan. Usage: runMain graft.Probe <queryName> <sfDir> [explain] */
+/** Dev-only timing main, three modes:
+  *   runMain graft.Probe suite <sfDir> <q1,q2,...> [reps=N] [queryCap=N] [jobs]
+  *   runMain graft.Probe sql <sfDir> <sql text>
+  *   runMain graft.Probe annrecall <sfDir> <qname> [queryCap=N] */
 object Probe {
+  /** One timed run: wall seconds end to end, the build-phase share
+    * (jobs run while the DataFrame is constructed), and the row count. */
+  private case class Run(total: Double, build: Double, rows: Long)
+
   /** Shared warmup + steady-state timing (measurement policy — full-plan
     * execution, cache clearing — lives in Sessions.runFully; this only
     * adds the warmup/clear/clock shape so the modes can't diverge). */
-  private def timed(spark: org.apache.spark.sql.SparkSession,
-      onTimedStart: () => Unit = () => ())(
-      build: => org.apache.spark.sql.DataFrame): (Double, Long) = {
+  private def timed(spark: SparkSession, onTimedStart: () => Unit = () => ())(
+      build: => DataFrame): Run = {
     Sessions.runFully(build); Sessions.releaseAll(spark) // warmup
     onTimedStart()
     val t0 = System.nanoTime()
-    val n = Sessions.runFully(build)
-    val dt = (System.nanoTime() - t0) / 1e9
+    val df = build
+    val t1 = System.nanoTime()
+    val n = Sessions.runFully(df)
+    val t2 = System.nanoTime()
     Sessions.releaseAll(spark)
-    (dt, n)
+    Run((t2 - t0) / 1e9, (t1 - t0) / 1e9, n)
   }
 
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val mode = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.local(cpus)
-    if (name == "fps") {
-      (1 to 2).foreach { i =>
-        var t0 = System.nanoTime()
-        val df = graft.queries.Dedup.simhashFps(spark, sfDir)
-        val n1 = df.count()
-        println(f"PROBE fps-aqe run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n1 rows)")
-        t0 = System.nanoTime()
-        val ck = graft.queries.Dedup.simhashFps(spark, sfDir).localCheckpoint()
-        println(f"PROBE fps-ckpt run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      spark.stop(); return
+    try mode match {
+      case "sql" =>
+        graft.sources.Tables.registerAll(spark, sfDir)
+        val r = timed(spark)(spark.sql(args(2)))
+        println(f"PROBE sql: ${r.total}%.2f s (${r.rows} rows)")
+      case "annrecall" =>
+        // recall@K of an ANN query vs brute truth at this dir's scale;
+        // queryCap bounds the brute side at the big dirs
+        args.drop(3).foreach { a =>
+          if (a.startsWith("queryCap="))
+            sys.props("graft.probe.queryCap") = a.stripPrefix("queryCap=")
+        }
+        println("PROBE annrecall: " +
+          graft.queries.Similarity.serveRecall(spark, sfDir, args(2)))
+      case "suite" => suite(spark, sfDir, args)
+      case other =>
+        sys.error(s"unknown Probe mode '$other' (suite, sql, annrecall)")
+    } finally spark.stop()
+  }
+
+  /** Time several queries in one JVM. A failing query (e.g. a 100x
+    * probe dir that only carries the four big tables) reports FAIL and
+    * the suite continues — tools/probes.py records it as n/a instead of
+    * losing the whole batch. Each line reads
+    * `PROBE <q>: <total> s (<n> rows) (build <b> + exec <e>)`, the
+    * build/exec split of the reported run.
+    * Optional trailing `queryCap=N` pins the ANN family's query set
+    * to its first N query ids (the fixed-query serve probes — r13
+    * verdict ask #1); set BEFORE any SparkEntry access so even
+    * SQL frozen at query-registry init sees the cap.
+    * Optional trailing `reps=N`: time each query N times (after the
+    * shared warmup) and report the MIN — the Bench retry convention,
+    * for A/Bs where single-shot probe noise (±20%) swamps the
+    * effect under test. */
+  private def suite(spark: SparkSession, sfDir: String,
+      args: Array[String]): Unit = {
+    var reps = 1
+    var countJobs = false
+    args.drop(3).foreach { a =>
+      if (a.startsWith("queryCap="))
+        sys.props("graft.probe.queryCap") = a.stripPrefix("queryCap=")
+      if (a.startsWith("reps=")) reps = a.stripPrefix("reps=").toInt
+      if (a == "jobs") countJobs = true
     }
-    if (name == "sql") {
-      graft.sources.Tables.registerAll(spark, sfDir)
-      val sql = args(2)
-      val (dt, n) = timed(spark)(spark.sql(sql))
-      println(f"PROBE sql: $dt%.2f s ($n rows)")
-      spark.stop(); return
-    }
-    if (name == "twolevel") {
-      // selector probe (round-10 ask #2): a synthetic corpus big enough
-      // that adaptive k crosses a LOWERED flat ceiling, so assignAuto
-      // takes the two-level path — and the flat path at the same k runs
-      // beside it for the cost ratio. Deterministic hash-derived
-      // vectors; n from args(2) (default 1M -> k = n/250 = 4000).
-      import org.apache.spark.sql.functions._
-      val n = if (args.length > 2) args(2).toLong else 1000000L
-      val dim = 16
-      val iters = 2
-      val k = math.max(8L, (n + 249L) / 250L).toInt // the adaptive-k curve
-      val v = spark.range(n).select(col("id"), expr(
-        s"transform(sequence(1, $dim), i -> pmod(CAST(hash(id * $dim + i) AS BIGINT), 1000000L))")
-        .as("qv")).persist()
-      v.count()
-      spark.conf.set(graft.operators.KMeans.FlatKCeilingKey, (k - 1).toString)
-      val (dt2, n2) = timed(spark)(
-        graft.operators.KMeans.assignAuto(v, k, iters, dim))
-      println(f"PROBE twolevel n=$n k=$k auto(two-level): $dt2%.2f s ($n2 rows)")
-      val (dt1, n1) = timed(spark)(
-        graft.operators.KMeans.assign(v, k, iters, dim))
-      println(f"PROBE twolevel n=$n k=$k flat:            $dt1%.2f s ($n1 rows)")
-      v.unpersist()
-      spark.stop(); return
-    }
-    if (name == "parts") {
-      // scratch part-by-part timer for the investigation of the day —
-      // dev-only, edited in place per experiment (never referenced by
-      // bench/verify)
-      import org.apache.spark.sql.functions._
-      val pJobs = new java.util.concurrent.atomic.AtomicInteger
+    // `jobs`: count scheduler jobs/stages/tasks during the LAST timed
+    // rep (dev diagnostics only — §1's "know your job count" step)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    if (countJobs)
       spark.sparkContext.addSparkListener(
         new org.apache.spark.scheduler.SparkListener {
           override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            pJobs.incrementAndGet()
-        })
-      def t[A](label: String)(f: => A): A = {
-        Thread.sleep(200); pJobs.set(0)
-        val t0 = System.nanoTime()
-        val r = f
-        val dt = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(200)
-        println(f"PARTS $label: $dt%.2f s [jobs ${pJobs.get}]")
-        r
-      }
-      (1 to 2).foreach { i =>
-        println(s"--- pass $i")
-        // r16-close neutral shape: jaccardPairs build vs its CC consumer
-        // (edit in place for the experiment of the day)
-        var jp: org.apache.spark.sql.DataFrame = null
-        t("jaccardPairs build (eager scratch)") {
-          jp = graft.queries.Dedup.jaccardPairs(spark, sfDir)
-            .select(col("a_id"), col("b_id"))
-        }
-        t("CC.run over jp")(Sessions.runFully(
-          graft.operators.ConnectedComponents.run(jp)))
-        Sessions.releaseAll(spark)
-      }
-      spark.stop(); return
-    }
-    if (name == "q120stats") {
-      println(graft.queries.Dedup.q120CandStats(spark, sfDir))
-      spark.stop(); return
-    }
-    if (name == "annrecall") {
-      // recall@K of an ANN query vs brute truth at this dir's scale;
-      // queryCap bounds the brute side at the big dirs
-      args.drop(3).foreach { a =>
-        if (a.startsWith("queryCap="))
-          sys.props("graft.probe.queryCap") = a.stripPrefix("queryCap=")
-      }
-      println("PROBE annrecall: " +
-        graft.queries.Similarity.serveRecall(spark, sfDir, args(2)))
-      spark.stop(); return
-    }
-    if (name == "suite") {
-      // time several queries in one JVM: runMain graft.Probe suite <dir> q36_x,q37_y
-      // A failing query (e.g. a 100x probe dir that only carries the four
-      // big tables) reports FAIL and the suite continues — tools/probes.py
-      // records it as n/a instead of losing the whole batch.
-      // Optional trailing `queryCap=N` pins the ANN family's query set
-      // to its first N query ids (the fixed-query serve probes — r13
-      // verdict ask #1); set BEFORE any SparkEntry access so even
-      // SQL frozen at query-registry init sees the cap.
-      // Optional trailing `reps=N`: time each query N times (after the
-      // shared warmup) and report the MIN — the Bench retry convention,
-      // for A/Bs where single-shot probe noise (±20%) swamps the
-      // effect under test.
-      var reps = 1
-      var countJobs = false
-      args.drop(3).foreach { a =>
-        if (a.startsWith("queryCap="))
-          sys.props("graft.probe.queryCap") = a.stripPrefix("queryCap=")
-        if (a.startsWith("reps=")) reps = a.stripPrefix("reps=").toInt
-        if (a == "jobs") countJobs = true
-      }
-      // `jobs`: count scheduler jobs/stages/tasks during the LAST timed
-      // rep (dev diagnostics only — §1's "know your job count" step)
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val stages = new java.util.concurrent.atomic.AtomicInteger
-      val tasks = new java.util.concurrent.atomic.AtomicInteger
-      if (countJobs)
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(
-                j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-              jobs.incrementAndGet()
-              stages.addAndGet(j.stageInfos.size)
-              tasks.addAndGet(j.stageInfos.map(_.numTasks).sum)
-            }
-          })
-      args(2).split(",").toSeq.foreach { qn =>
-        try {
-          val runs = (1 to reps).map { i =>
-            val reset: () => Unit =
-              if (countJobs && i == reps) { () =>
-                Thread.sleep(300) // let the async listener bus drain
-                jobs.set(0); stages.set(0); tasks.set(0)
-              } else () => ()
-            timed(spark, reset)(SparkEntry.queries(qn)(spark, sfDir))
+              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+            jobs.incrementAndGet()
+            stages.addAndGet(j.stageInfos.size)
+            tasks.addAndGet(j.stageInfos.map(_.numTasks).sum)
           }
-          val (dt, n) = (runs.map(_._1).min, runs.head._2)
-          val jn = if (countJobs) {
-            // the listener is async; drain before reading
-            Thread.sleep(300) // let the async listener bus drain
-            f" [jobs ${jobs.get}, stages ${stages.get}, tasks ${tasks.get}]"
-          } else ""
-          println(f"PROBE $qn: $dt%.2f s ($n rows)$jn")
-        } catch {
-          // NonFatal only: after an OutOfMemoryError/LinkageError the
-          // shared JVM's remaining timings are garbage — let the fatal
-          // error abort the batch (tools/probes.py fail-louds on a
-          // batch with no timings) instead of recording them (ADVICE r13)
-          case scala.util.control.NonFatal(e) =>
-            Sessions.releaseAll(spark)
-            val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-              .linesIterator.take(1).mkString
-            println(s"PROBE $qn: FAIL ($msg)")
+        })
+    args(2).split(",").toSeq.foreach { qn =>
+      try {
+        val runs = (1 to reps).map { i =>
+          val reset: () => Unit =
+            if (countJobs && i == reps) { () =>
+              bridge.drainListenerBus(spark)
+              jobs.set(0); stages.set(0); tasks.set(0)
+            } else () => ()
+          timed(spark, reset)(SparkEntry.queries(qn)(spark, sfDir))
         }
+        val r = runs.minBy(_.total)
+        val jn = if (countJobs) {
+          bridge.drainListenerBus(spark) // the listener is async
+          f" [jobs ${jobs.get}, stages ${stages.get}, tasks ${tasks.get}]"
+        } else ""
+        println(f"PROBE $qn: ${r.total}%.2f s (${r.rows} rows) " +
+          f"(build ${r.build}%.2f + exec ${r.total - r.build}%.2f)$jn")
+      } catch {
+        // NonFatal only: after an OutOfMemoryError/LinkageError the
+        // shared JVM's remaining timings are garbage — let the fatal
+        // error abort the batch (tools/probes.py fail-louds on a
+        // batch with no timings) instead of recording them (ADVICE r13)
+        case scala.util.control.NonFatal(e) =>
+          Sessions.releaseAll(spark)
+          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+            .linesIterator.take(1).mkString
+          println(s"PROBE $qn: FAIL ($msg)")
       }
-      spark.stop(); return
     }
-    val fn = SparkEntry.queries(name)
-    if (args.contains("explain")) {
-      // lazyScratch: scratch-cached builders (q36/q37/q63/...) otherwise
-      // materialize eagerly and explain() would only show a checkpoint
-      // scan; the leaked persists are dropped by the releaseAll below
-      sys.props("graft.lazyScratch") = "1"
-      try fn(spark, sfDir).explain("formatted")
-      finally { sys.props.remove("graft.lazyScratch"); Sessions.releaseAll(spark) }
-    }
-    // warmup + 2 timed runs; "total" is the honest number — scratch-cached
-    // builders do their work eagerly in the build phase
-    Sessions.runFully(fn(spark, sfDir)); Sessions.releaseAll(spark)
-    (1 to 2).foreach { i =>
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      val t1 = System.nanoTime()
-      val n = Sessions.runFully(df)
-      val t2 = System.nanoTime()
-      println(f"PROBE $name run$i: total ${(t2 - t0) / 1e9}%.2f s " +
-        f"(build ${(t1 - t0) / 1e9}%.2f + exec ${(t2 - t1) / 1e9}%.2f) ($n rows)")
-      Sessions.releaseAll(spark)
-    }
-    spark.stop()
   }
 }

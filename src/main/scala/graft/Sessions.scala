@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.bridge
 
 /** Shared session construction + full-plan execution for the harness
   * mains (Verify / Bench / Probe) — one place for local-mode config. */
@@ -16,13 +17,6 @@ object Sessions {
       // one core). 8 MB splits the probe files across the pool; a real
       // cluster keeps the default (its inputs arrive as many files).
       .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
-      // AQE partition-coalescing policy, env-parameterised for A/Bs
-      // (default = Spark's default, which favors parallelism; false
-      // sizes reducers purely by advisory bytes — the documented
-      // production setting for large clusters, but it serializes the
-      // compute-heavy byte-small reducers this suite is full of).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -42,8 +36,7 @@ object Sessions {
     // blocking: releaseAll always runs off-the-clock (between timed
     // passes), and an async drop would overlap the next measurement with
     // block-removal churn — the distortion this helper exists to stop
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    bridge.unpersistAll(spark.sparkContext)
   }
 
   /** Execute the query's FULL physical plan and return the row count.

@@ -56,18 +56,9 @@ object Dedup {
     * caller drops the result, the same contract ConnectedComponents'
     * per-iteration checkpoints rely on. */
   private[queries] def withScratch(scratch: DataFrame*)(body: => DataFrame): DataFrame = {
-    // dev-introspection escape (graft.lazyScratch sysprop, set by Probe's
-    // explain mode): return the UNmaterialized plan so explain() shows
-    // the real operator tree instead of a checkpoint scan. Leaks the
-    // scratch persists by design — never set it in a real run.
-    if (sys.props.contains("graft.lazyScratch")) {
-      scratch.foreach(_.persist())
-      body
-    } else {
-      scratch.foreach(_.persist())
-      try body.localCheckpoint()
-      finally scratch.foreach(_.unpersist(blocking = true))
-    }
+    scratch.foreach(_.persist())
+    try body.localCheckpoint()
+    finally scratch.foreach(_.unpersist(blocking = true))
   }
 
   /** Exact Jaccard >= 0.5 near-dup pairs (a_id, b_id, jac) — the q36
@@ -3143,31 +3134,6 @@ object Dedup {
           .as(Seq("a", "b")))
         .select(col("a").as("a_id"), col("b").as("b_id"))
     }
-  }
-
-  /** Dev probe (graft.Probe q120stats): candidate-volume and timing
-    * stats for the two q120 generator variants at a scale dir — raw
-    * emissions, distinct candidates, and wall time per variant, the
-    * numbers that adjudicate whether the positional filter pays at a
-    * given corpus regime. */
-  private[graft] def q120CandStats(s: SparkSession, dir: String): String = {
-    val base = shingled(s, dir)
-    base.persist()
-    base.count()
-    try {
-      def timed(df: DataFrame): (Long, Double) = {
-        val t0 = System.nanoTime()
-        val n = df.count()
-        (n, (System.nanoTime() - t0) / 1e9)
-      }
-      Seq(false, true).map { p =>
-        val raw = q120RawPairs(base, 0.5, positional = p)
-        val (nRaw, tRaw) = timed(raw)
-        val (nDist, tDist) = timed(raw.distinct())
-        f"variant=${if (p) "positional" else "length-only"}%-11s " +
-          f"raw=$nRaw%,d (${tRaw}%.2f s)  distinct=$nDist%,d (${tDist}%.2f s)"
-      }.mkString("\n")
-    } finally { base.unpersist(blocking = false); () }
   }
 
   /** The EXACT banding tuning curve — the q203 ledger entry of rounds

@@ -6,8 +6,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Access bridge for `private[sql]` Column <-> Expression conversion —
   * the standard pattern for libraries that ship custom Catalyst
-  * expressions without forking Spark. Kept to the two conversions;
-  * everything else in this repo uses public APIs. */
+  * expressions without forking Spark, plus the few other private[sql] /
+  * private[spark] hooks documented below; everything else in this repo
+  * uses public APIs. */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -25,6 +26,25 @@ object bridge {
   def cacheIsEmpty(spark: org.apache.spark.sql.SparkSession): Boolean =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty
+
+  /** Unpersist every persisted RDD, blocking. A locally checkpointed
+    * RDD is dropped through `SparkContext.unpersistRDD` (private[spark])
+    * directly: `RDD.unpersist` would log a "lineage has been truncated"
+    * WARN for each one, and a released scratch checkpoint is never read
+    * again. */
+  def unpersistAll(sc: org.apache.spark.SparkContext): Unit =
+    sc.getPersistentRDDs.values.foreach { rdd =>
+      if (rdd.checkpointData.exists(
+          _.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]]))
+        sc.unpersistRDD(rdd.id, blocking = true)
+      else rdd.unpersist(blocking = true)
+    }
+
+  /** Block until every event posted so far has reached its listeners
+    * (the listener bus is private[spark]) — graft.Plans and Probe's job
+    * counter read what their listeners saw only after this returns. */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** DataFrame over an RDD[InternalRow] without a Row (de)serialization
     * round-trip (`internalCreateDataFrame` is private[sql]). Used by

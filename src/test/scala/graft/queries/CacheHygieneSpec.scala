@@ -55,6 +55,33 @@ class CacheHygieneSpec extends SparkSpec {
       s"scratch-sized blocks still cached: ${infos.mkString(", ")}")
   }
 
+  test("releaseAll frees every block without a lineage-truncated WARN") {
+    val sc = spark.sparkContext
+    // RDD.unpersist WARNs once per locally checkpointed RDD; releaseAll
+    // frees those through SparkContext.unpersistRDD and must log nothing
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val rootLog = org.apache.logging.log4j.LogManager.getRootLogger
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-warns", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    rootLog.addAppender(appender)
+    try {
+      run("q36_dedup_jaccard")
+      assert(sc.getPersistentRDDs.nonEmpty) // the checkpointed result
+      graft.Sessions.releaseAll(spark)
+    } finally rootLog.removeAppender(appender)
+    assert(sc.getPersistentRDDs.isEmpty)
+    assert(sc.getRDDStorageInfo.forall(_.numCachedPartitions == 0),
+      sc.getRDDStorageInfo.mkString(", "))
+    assert(!warns.toArray.exists(_.toString.contains("truncated")),
+      warns.toArray.mkString("\n"))
+  }
+
   test("q39 refuses to broadcast an oversized all-pairs side") {
     spark.conf.set(Dedup.AllPairsMaxRowsKey, "10")
     try {
